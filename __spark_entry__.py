@@ -165,7 +165,9 @@ def q_star_join_revenue(spark, sf):
         .groupBy("r_name", "n_name")
         .agg(
             F.sum("_rev").cast("double").alias("revenue"),
-            F.sum("_n").alias("n_items"),
+            # sum over a non-empty group is never NULL; coalesce restores
+            # the non-nullable schema of the flat form's count(*)
+            F.coalesce(F.sum("_n"), F.lit(0)).alias("n_items"),
         )
     )
 

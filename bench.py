@@ -114,40 +114,6 @@ def main() -> None:
     extras["turns_per_sec"] = round(n_turns / dt, 1)
     extras["triples_per_sec"] = round(n_triples / dt, 1)
 
-    # the zero-Python backend, measured on a small subset and reported as
-    # an EXTRA (not summed into the headline wall). The backend's one-time
-    # session cost (Janino codegen of the regex/Bloom expression trees +
-    # first-use warmup, ~6-9 s at local[32], data-size independent) is now
-    # paid EXPLICITLY by prewarm_extraction — the same warmup the CLI
-    # overlaps with input reading on a background thread — and reported as
-    # its own row (methodology change r4, disclosed: in r2/r3 this cost
-    # was inside the first timed run as `kg_annotate_jvm_sec_20k` cold).
-    # Post-prewarm, the first real query reports as
-    # `kg_annotate_jvm_sec_20k`; the residual gap to the warm row is AQE
-    # planning the real scan shape, which a dummy cannot precompile.
-    from biosd_feature_annotator_spark.plans.pipeline import prewarm_extraction
-
-    sub = transcripts.where("conv_id < 'c0000000450'")
-    t0 = time.time()
-    # like= warms against a small slice of the real relation, so the
-    # generated classes match the production query's exactly (a detached
-    # dummy leaves ~46 units cold under AQE's small-input replanning)
-    prewarm_extraction(spark, lex, like=transcripts.where("conv_id < 'c0000000020'"))
-    extras["kg_annotate_jvm_prewarm_sec"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    n_jvm = force(
-        annotate(spark, sub, lex, build_graph=False, extraction="jvm")["triples"]
-    )
-    extras["kg_annotate_jvm_sec_20k"] = round(time.time() - t0, 3)
-    # warm row gets the same min-of-2 protocol as every timed entry (the
-    # first-real row is inherently single-shot: once run, it IS warm)
-    extras["kg_annotate_jvm_warm_sec_20k"] = timed_min(
-        lambda: annotate(spark, sub, lex, build_graph=False, extraction="jvm")[
-            "triples"
-        ]
-    )
-    extras["kg_annotate_jvm_triples"] = n_jvm
-
     timings["kg_graph_cc"] = timed_min(
         lambda: annotate(
             spark, transcripts.where("conv_id like 'c0000000%'"), lex

@@ -68,12 +68,11 @@ _TOKEN_RE = re.compile(r"\w+")
 TIME_UNITS = {"year", "week", "month", "day"}
 
 # P5 predicate routing — the SINGLE source of truth (ADVICE r2: this used
-# to live as three hand-maintained copies). Consumed by (a) _value_pred,
-# the per-turn dedup key in the Python extractor; (b) pred_when_chain, the
-# Catalyst when/otherwise form used by operators/link.route_predicates AND
-# the JVM backend's in-array routing (extract_jvm). An edit here changes
-# all three together; tests/test_extract_jvm.py's fingerprint parity is
-# the guard.
+# to live as hand-maintained copies). Consumed by (a) _value_pred, the
+# per-turn dedup key in the Python extractor; (b) pred_when_chain, the
+# Catalyst when/otherwise form used by operators/link.route_predicates.
+# An edit here changes both together; tests/test_linking_guard.py checks
+# pred_when_chain against this table cell by cell.
 PRED_ROUTING: dict[tuple[str, bool], str] = {
     ("number", True): "hasAge",
     ("number", False): "hasNumber",
@@ -277,7 +276,7 @@ _KIND_RANK = {"label": 0, "synonym": 1, "tokens": 2}
 def _value_pred(m: dict) -> str:
     """PRED_ROUTING applied to one mention dict — used only for the
     per-turn dedup key so it matches the triple's real identity (the same
-    table drives link.route_predicates and the JVM backend)."""
+    table drives link.route_predicates)."""
     is_age = bool(m["age_ctx"]) and m["unit"] in TIME_UNITS
     return PRED_ROUTING[(m["kind"], is_age)]
 

@@ -19,8 +19,7 @@ Mechanics (all Catalyst, no Python in the row path):
   the default 2^20 bits that is 16K longs ≈ 128 KB, the same class of
   driver traffic as a broadcast-join build or an IVF centroid table)
   and folded into ONE CSV string literal that ConstantFolding expands
-  at optimization time (the extract_jvm Bloom-literal trick: ~8 ms vs
-  ~2 s of py4j element marshalling);
+  at optimization time (~8 ms vs ~2 s of py4j element marshalling);
 - the probe is a pure-codegen expression on the big side: one xxhash64
   + array index + shift — evaluated at the scan, BEFORE any exchange;
 - a false positive only costs a wasted shuffle row: the exact semi-join

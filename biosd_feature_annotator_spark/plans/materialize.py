@@ -95,14 +95,12 @@ def run_annotate(
     only_parts: list[int] | None = None,
     resume: bool = False,
     build_graph: bool = True,
-    extraction: str = "python",
 ) -> DataFrame:
     """Annotate → partitioned triple sink + manifests. Returns the manifest
     rows written by THIS invocation.
 
     only_parts simulates a partial/crashed run in tests; resume=True skips
     parts already marked done in the manifest (anti-join J4).
-    extraction: forwarded to plans.pipeline.annotate ("python" | "jvm").
     """
     t0 = time.time()
     src = with_part_id(transcripts, n_parts)
@@ -117,7 +115,7 @@ def run_annotate(
     if only_parts is not None:
         src = src.where(F.col("part_id").isin(only_parts))
 
-    plan = annotate(spark, src, lex, build_graph=build_graph, extraction=extraction)
+    plan = annotate(spark, src, lex, build_graph=build_graph)
     # part_id is a pure function of conv_id — recompute on the output
     # rather than joining it back through the pipeline
     triples = with_part_id(plan["triples"], n_parts)
@@ -154,7 +152,7 @@ def run_annotate(
             F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
             "input_fingerprint",
             "triple_fingerprint",
-            F.lit(wall_ms).alias("wall_ms"),
+            F.lit(wall_ms).cast("long").alias("wall_ms"),
             F.current_timestamp().alias("ts"),
         )
     )

@@ -46,6 +46,7 @@ def test_number_negative_and_zero():
 
 def test_number_scientific():
     assert vals("concentration 4.5e-3 molar") == [("num:0.0045", None)]
+    assert vals("dose 9e999 administered") == []  # overflow is not a value
 
 
 def test_number_word_boundary_negative():
@@ -55,6 +56,8 @@ def test_number_word_boundary_negative():
 
 def test_number_unit():
     assert vals("weight 72 kg at intake") == [("num:72", "kilogram")]
+    # first unit wins; the second 72 shares (obj, pred) and is deduped
+    assert vals("weighed 72 kg and measured 72 cm today") == [("num:72", "kilogram")]
 
 
 # ---- ranges (X2) ---------------------------------------------------------
@@ -67,6 +70,8 @@ def test_number_unit():
         ("temp 36.5 .. 37.5 observed", [("range:[36.5,37.5]", None)]),
         ("5-10 weeks storage", [("range:[5,10]week", "week")]),
         ("catalog -5 discount", [("num:-5", None)]),  # sign, not range
+        ("between 3 and 9 years old since 1998",
+         [("range:[3,9]year", "year"), ("date:1998-01-01", None)]),
     ],
 )
 def test_ranges(text, expected):

@@ -3,7 +3,9 @@ triples assemble_triples' global dropDuplicates([subj, pred, obj]) would —
 including the '72 kg and 72 cm' case where two value mentions share the
 triple identity but differ in unit; (2) a multi-candidate dictionary must
 never reach the unranked fast path (is_functional guard), and the ranked
-W1 window must pick the max-conf / min-term_id winner."""
+W1 window must pick the max-conf / min-term_id winner. Also: the Catalyst
+predicate router agrees with PRED_ROUTING, the table the Python dedup key
+reads."""
 
 from __future__ import annotations
 
@@ -193,3 +195,27 @@ def test_alias_priors_hand_case(spark):
     assert d.rank == 2 and d.prior_micro == 400_000
     h = got[("human", "HOMO")]
     assert h.prior_micro == 1_000_000        # (1+1)e6 // (1+1)
+
+
+def test_pred_when_chain_matches_pred_routing(spark):
+    """pred_when_chain (route_predicates' Catalyst form) must agree with
+    PRED_ROUTING on every (kind, is_age) cell; a NULL is_age falls through
+    to the non-age predicate, like the Python form's bool()."""
+    from biosd_feature_annotator_spark.operators.extract import (
+        PRED_ROUTING,
+        pred_when_chain,
+    )
+
+    cells = [(k, a) for k in ("number", "range", "date") for a in (True, False, None)]
+    df = spark.createDataFrame(cells, "kind string, is_age boolean")
+    got = {
+        (r.kind, r.is_age): r.pred
+        for r in df.select(
+            "kind", "is_age",
+            pred_when_chain(F.col("kind"), F.col("is_age")).alias("pred"),
+        ).collect()
+    }
+    assert len(got) == len(cells)
+    # bool(None) is False: a NULL is_age must route like a non-age mention
+    for (kind, is_age), pred in got.items():
+        assert pred == PRED_ROUTING[(kind, bool(is_age))], (kind, is_age)

@@ -293,7 +293,8 @@ def test_star_join_preagg_matches_flat_formulation(spark):
     import __spark_entry__ as entrymod
 
     sf = "/root/testdata/sf0.001"
-    got = _rows(entrymod.q_star_join_revenue(spark, sf))
+    q = entrymod.q_star_join_revenue(spark, sf)
+    got = _rows(q)
 
     l, o, c = (entrymod._t(spark, sf, x)
                for x in ("lineitem", "orders", "customer"))
@@ -310,6 +311,7 @@ def test_star_join_preagg_matches_flat_formulation(spark):
         )
     )
     assert got == want
+    assert not q.schema["n_items"].nullable
 
 
 def test_rolling_exact_explode_matches_theta_join(spark):

@@ -33,8 +33,8 @@ def main() -> None:
     n_head, inner = 2_000_000, 3
     for i in range(reps):
         for _attempt in range(2):
-            a = run_level(2, n_head, inner, "python", script)
-            b = run_level(8, n_head, inner, "python", script)
+            a = run_level(2, n_head, inner, script)
+            b = run_level(8, n_head, inner, script)
             c = hardware_ceiling(2, 8)
             if 0.85 <= c["ceiling_eff"] <= 1.02:
                 break

@@ -43,11 +43,8 @@ Methodology details:
 - a Spark-free CONTROL (the same extract_from_text kernel in N perfectly
   partitioned OS processes, zero framework) measures the hardware's own
   N→4N ceiling next to each rep.
-- the zero-Python JVM extraction backend (operators/extract_jvm,
-  annotate(extraction="jvm")) is measured at the same pairing — scaling
-  evidence with Arrow IPC and Python workers entirely out of the path.
 - determinism: the output bit_xor fingerprint must be identical across
-  every level, backend and rep.
+  every level and rep.
 
 Writes BENCH/BASELINE.md. Usage:
     python tools/scaling_bench.py [reps] [--quick]
@@ -72,12 +69,12 @@ from biosd_feature_annotator_spark.synth import synth_transcripts, bench_lexicon
 from biosd_feature_annotator_spark.plans.pipeline import annotate
 from pyspark.sql import functions as F
 
-cores, n, reps, extraction = int(sys.argv[1]), int(sys.argv[2]), int(sys.argv[3]), sys.argv[4]
+cores, n, reps = int(sys.argv[1]), int(sys.argv[2]), int(sys.argv[3])
 # optional barrier files (multi-JVM mode): after warm-up, signal readiness
 # and wait for the parent's GO so all JVMs' timed windows run concurrently
-ready_path = sys.argv[5] if len(sys.argv) > 5 else "-"
-go_path = sys.argv[6] if len(sys.argv) > 6 else "-"
-spark = get_spark(master=f"local[{cores}]", app_name=f"scale-{cores}-{extraction}",
+ready_path = sys.argv[4] if len(sys.argv) > 4 else "-"
+go_path = sys.argv[5] if len(sys.argv) > 5 else "-"
+spark = get_spark(master=f"local[{cores}]", app_name=f"scale-{cores}",
                   extra_conf={"spark.sql.execution.arrow.maxRecordsPerBatch": "32768"})
 lex = bench_lexicon(5000)  # production-sized dictionary (matcher is size-free)
 # deterministic in-memory input: realistic ~40-word turns, 50% with
@@ -87,8 +84,8 @@ lex = bench_lexicon(5000)  # production-sized dictionary (matcher is size-free)
 # rule as reading a bucket(conv_id) Iceberg table.
 tr = synth_transcripts(spark, n, rich_rate=0.5, filler_words=40).persist()
 n_turns = tr.count()
-annotate(spark, tr.limit(5000), lex, build_graph=False, repartition=0,
-         extraction=extraction)["triples"].count()  # untimed warmup
+annotate(spark, tr.limit(5000), lex, build_graph=False,
+         repartition=0)["triples"].count()  # untimed warmup
 
 def fingerprint(df):
     return df.select(F.xxhash64(
@@ -117,11 +114,11 @@ for _ in range(reps):
     spark.sparkContext._jvm.System.gc()
     t0 = time.time()
     row = fingerprint(annotate(spark, tr, lex, build_graph=False,
-                               repartition=0, extraction=extraction)["triples"])
+                               repartition=0)["triples"])
     walls.append(round(time.time() - t0, 2)); fp, n_triples = row.fp, row.n
 walls.sort()
 med = walls[len(walls) // 2]
-print(json.dumps({"cores": cores, "extraction": extraction, "n_turns": n_turns,
+print(json.dumps({"cores": cores, "n_turns": n_turns,
                   "n_triples": n_triples, "fp": fp, "walls": walls,
                   "wall_med": med, "turns_per_sec": round(n_turns / med, 1),
                   "triples_per_sec": round(n_triples / med, 1)}))
@@ -191,10 +188,9 @@ def hardware_ceiling(lo: int, hi: int) -> dict:
     return {"lo": round(a), "hi": round(b), "ceiling_eff": round((b / a) / 4, 3)}
 
 
-def run_level(cores: int, n_turns: int, inner_reps: int, extraction: str,
-              script: str) -> dict:
+def run_level(cores: int, n_turns: int, inner_reps: int, script: str) -> dict:
     cmd = ["taskset", "-c", f"0-{cores - 1}", sys.executable, script,
-           str(cores), str(n_turns), str(inner_reps), extraction]
+           str(cores), str(n_turns), str(inner_reps)]
     out = subprocess.run(cmd, capture_output=True, text=True, check=True, cwd=REPO)
     return json.loads(out.stdout.strip().splitlines()[-1])
 
@@ -208,7 +204,7 @@ def run_multi_jvm(n_turns: int, inner: int, script: str) -> dict:
     2-core slices vs 4× one slice's throughput is the efficiency. Timed
     windows are barrier-aligned: every JVM warms up, signals ready, and
     starts timing only on the parent's GO."""
-    base = run_level(2, n_turns, inner, "python", script)
+    base = run_level(2, n_turns, inner, script)
 
     tmp = tempfile.mkdtemp(prefix="kg_scale_mjvm_")
     go = os.path.join(tmp, "go")
@@ -217,7 +213,7 @@ def run_multi_jvm(n_turns: int, inner: int, script: str) -> dict:
     procs = [
         subprocess.Popen(
             ["taskset", "-c", pins[i], sys.executable, script,
-             "2", str(n_turns), str(inner), "python", readies[i], go],
+             "2", str(n_turns), str(inner), readies[i], go],
             stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True, cwd=REPO,
         )
         for i in range(4)
@@ -259,7 +255,7 @@ def main() -> None:
     N_HEAD = 2_000_000 if not quick else 200_000
     inner = 3 if not quick else 2
 
-    # --- headline: python backend at 2 → 8, adjacent phases per rep.
+    # --- headline: 2 → 8 cores, adjacent phases per rep.
     # Interference guard, TWO-SIDED (r5: the r4 guard was one-sided and a
     # noisy-box run slipped through with control 0.750):
     # - control ceiling > 1.02 is physically impossible on an idle box
@@ -275,8 +271,8 @@ def main() -> None:
     head, ctls, flagged = [], [], 0
     for _ in range(reps):
         for attempt in range(2):
-            a = run_level(2, N_HEAD, inner, "python", script)
-            b = run_level(8, N_HEAD, inner, "python", script)
+            a = run_level(2, N_HEAD, inner, script)
+            b = run_level(8, N_HEAD, inner, script)
             c = hardware_ceiling(2, 8)
             if 0.85 <= c["ceiling_eff"] <= 1.02:
                 break
@@ -288,19 +284,16 @@ def main() -> None:
     eff = round(effs[len(effs) // 2], 3)
     ceiling = sorted(ctls)[len(ctls) // 2]
 
-    # --- decay curve + JVM backend (two adjacent attempts per pairing,
-    # both reported; interference only ever subtracts, so the spread is
-    # visible in the table rather than silently averaged away)
+    # --- decay curve (two adjacent attempts per pairing, both reported;
+    # interference only ever subtracts, so the spread is visible in the
+    # table rather than silently averaged away)
     curve = []
-    for lo, hi, n, extraction in (
-        (4, 16, 1_600_000 if not quick else 200_000, "python"),
-        (8, 32, 1_600_000 if not quick else 200_000, "python"),
-        (2, 8, 400_000 if not quick else 100_000, "jvm"),
-    ):
+    for lo, hi in ((4, 16), (8, 32)):
+        n = 1_600_000 if not quick else 200_000
         for _ in range(2 if not quick else 1):
-            a = run_level(lo, n, 2, extraction, script)
-            b = run_level(hi, n, 2, extraction, script)
-            curve.append((lo, hi, extraction, a, b,
+            a = run_level(lo, n, 2, script)
+            b = run_level(hi, n, 2, script)
+            curve.append((lo, hi, a, b,
                           round((b["turns_per_sec"] / a["turns_per_sec"]) / 4.0, 3)))
 
     # --- multi-JVM (process-isolation) witness: 1×local[2] vs 4×local[2]
@@ -321,9 +314,9 @@ def main() -> None:
         for i, ((a, b, e), c) in enumerate(zip(head, ctls), 1)
     )
     curve_rows = "\n".join(
-        f"| local[{lo}] → local[{hi}] | {ex} | {a['n_turns']:,} | {a['wall_med']} "
+        f"| local[{lo}] → local[{hi}] | {a['n_turns']:,} | {a['wall_med']} "
         f"| {b['wall_med']} | {a['turns_per_sec']:,} | {b['turns_per_sec']:,} | {e:.3f} |"
-        for lo, hi, ex, a, b, e in curve
+        for lo, hi, a, b, e in curve
     )
     mjvm_rows = "\n".join(
         "| rep {i} | {base:,} | {per} | {agg:,} | **{eff:.3f}** |".format(
@@ -377,28 +370,10 @@ hit this wall, so the faithful single-box analogue of "N → 4N executors"
 keeps both levels below the knee. The pairing sweep makes the knee
 visible rather than asserted:
 
-| pairing | backend | turns | wall@N (s) | wall@4N (s) | thr@N | thr@4N | eff |
-|---|---|---|---|---|---|---|---|
-| local[2] → local[8] | python | {head[0][0]['n_turns']:,} | {head[0][0]['wall_med']} | {head[0][1]['wall_med']} | {head[0][0]['turns_per_sec']:,} | {head[0][1]['turns_per_sec']:,} | {head[0][2]:.3f} |
+| pairing | turns | wall@N (s) | wall@4N (s) | thr@N | thr@4N | eff |
+|---|---|---|---|---|---|---|
+| local[2] → local[8] | {head[0][0]['n_turns']:,} | {head[0][0]['wall_med']} | {head[0][1]['wall_med']} | {head[0][0]['turns_per_sec']:,} | {head[0][1]['turns_per_sec']:,} | {head[0][2]:.3f} |
 {curve_rows}
-
-The "jvm" rows are the zero-Python extraction backend
-(operators/extract_jvm.py, annotate(extraction="jvm")): codegen regex +
-Bloom-gated broadcast gram join, fingerprint-identical output
-(parity-tested against the pandas path on the synth AND golden corpora).
-It removes Arrow IPC and Python workers from the measurement entirely.
-Its lower efficiency here is understood, not hidden — and since r5 it is
-MEASURED, not argued: tools/jvm_stage_attribution.py tables every
-stage's wall and executor run time at both levels (see the r5
-attribution section below). The best-match reduction shuffle is ~5% of
-wall; ~75% of the gap is executor-runtime INFLATION (1.20-1.33×) in the
-two heavy codegen map branches — the masking chain and gram explode are
-memory-bandwidth-bound, so 4× the cores on ONE socket share the same
-DRAM channels (a real N→4N cluster adds sockets and does not) — and the
-rest is a fixed ~4 s broadcast-build floor. The production default
-remains the pandas path (compute-bound per row, hence 0.8+); the jvm
-rows exist as a second, Python-free witness of the same determinism and
-of the box's (not the engine's) saturation.
 
 ## Multi-JVM witness: 1 JVM × 2 cores → 4 JVMs × 2 cores
 
@@ -453,7 +428,7 @@ across every rep at both headline levels: {same_fp}
         f.write(md + "\n" + tail)
     print(json.dumps({"eff": eff, "ceiling": ceiling,
                       "mjvm_eff": mjvm_eff,
-                      "curve": [(lo, hi, ex, e) for lo, hi, ex, _, _, e in curve],
+                      "curve": [(lo, hi, e) for lo, hi, _, _, e in curve],
                       "same_fp": same_fp}))
 
 
