@@ -6,21 +6,27 @@ distributively. Mandated by BASELINE.json: "salted groupBy +
 connected-components-style merge on normalized surface forms".
 
 Graph: bipartite surface-node ↔ term-node edges from linked mentions
-(plus optional surface↔surface evidence edges). Components are computed
-with the classic hash-min label-propagation loop expressed purely in
-DataFrames:
+(plus optional surface↔surface evidence edges). Two ways to the
+components, chosen by canonicalize's fixed_rounds:
 
-    comp(v) ← min over neighbors-and-self of comp(...)
+- star forest (fixed_rounds=1, every campaign's case): with a functional
+  dictionary each surface links to exactly one term, so each component
+  is one term plus its surfaces. The nodes are two map-side combinable
+  aggregations — per surface its min term id and mention count, per term
+  its sorted surfaces and summed counts — in one lazy plan: no loop, no
+  checkpoint, no Spark job while the plan is built.
+- general graphs (fixed_rounds=None; multi-candidate dictionaries, the
+  registered queries, incremental maintenance): connected_components,
+  the classic hash-min label propagation with pointer jumping, expressed
+  purely in DataFrames:
 
-Each iteration is one shuffle (groupBy node). Star-shaped components
-around hot entities are exactly the skew case BASELINE.json calls out, so
-the aggregation is *salted*: a two-phase min — partial min on
-(node, salt), final min on node — which bounds any single reducer's input
-to |partition|/n_salt rows. Convergence for the bipartite linking graph is
-≤ 2 hops (diameter 2); the loop still checks a fixpoint via a changed-count
-and caps at max_iter for general graphs. Each iteration localCheckpoints to
-cut lineage (driver-side loop = one Spark job per round, the only loop in
-the engine — SURVEY.md §3.4).
+      comp(v) ← min over neighbors-and-self of comp(...)
+
+  Each round is one shuffle (groupBy node) plus the jump self-join,
+  localCheckpointed to cut lineage, and a changed-count probe stops the
+  loop at its fixpoint (capped at max_iter). Hot star centers need no
+  salt: Spark's map-side partial min already reduces a hot key to one
+  row per map task before the shuffle.
 
 Node ids are prefixed ('0:' terms, '1:' surfaces) so min() always elects a
 term id as the canonical representative when one exists.
@@ -77,42 +83,22 @@ def salted_min(df: DataFrame, key: str, val: str, n_salt: int = 8) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 10, n_salt: int = 8,
-    fixed_rounds: int | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 10) -> DataFrame:
     """edges(src, dst) → (node, component) with component = min node id in
     the component. Deterministic at any parallelism.
 
-    fixed_rounds=N runs exactly N rounds with no per-round localCheckpoint
-    and no convergence-probe job. Use it when the graph's diameter is
-    known (the functional-dictionary linking graph is a star forest —
-    every surface has exactly one term edge and '0:'-prefixed term ids
-    sort below '1:'-prefixed surfaces, so round 1 already elects the term
-    as every member's component). The general loop keeps the
-    changed-count fixpoint probe and per-round checkpoints (lineage cut).
-
-    The SEED checkpoints below stay in both modes: sym/comp are referenced
-    several times per round (push + self-min + pointer-jump self-join),
-    and without materialization the upstream edge derivation re-executes
-    per reference — measured 3× slower than the probe loop it was meant
-    to beat."""
+    One fixpoint loop: each round is a push-min aggregation plus a
+    pointer-jump self-join, checkpointed to cut lineage, and ends on a
+    changed-count probe. The symmetric edge relation is checkpointed once
+    up front: it is referenced several times per round (push + self-min +
+    pointer-jump self-join), and without materialization the upstream edge
+    derivation re-executes per reference."""
     sym = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    if fixed_rounds is not None and fixed_rounds <= 0:
-        # degenerate: zero propagation rounds — identity labels
-        return (
-            sym.select(F.col("src").alias("node"))
-            .distinct()
-            .withColumn("comp", F.col("node"))
-        )
-    sym = sym.localCheckpoint(eager=True)
-    general = fixed_rounds is None
+    ).localCheckpoint(eager=True)
     ctype = dict(sym.dtypes)["src"]
-    n_rounds = fixed_rounds if fixed_rounds is not None else max_iter
     comp = None
-    for r in range(n_rounds):
+    for r in range(max_iter):
         if r == 0:
             # FUSED round 1 (r6 optimization): with the identity seed
             # comp(v)=v the first push+min round equals
@@ -124,16 +110,14 @@ def connected_components(
             # Spark's partial (map-side) aggregation already IS the
             # two-phase salted min — each map task emits one row per
             # key, so a hot star center receives at most #map-tasks
-            # rows at the reducer (the physical partition is the salt;
-            # n_salt is kept for API compatibility).
+            # rows at the reducer (the physical partition is the salt).
             agg = sym.groupBy(F.col("src").alias("node")).agg(
                 F.min("dst").alias("_m")
             )
             new_comp = agg.select(
                 "node",
                 F.least(F.col("node"), F.col("_m")).alias("comp"),
-                *([(F.col("_m") < F.col("node")).alias("_chg")]
-                  if general else []),
+                (F.col("_m") < F.col("node")).alias("_chg"),
             )
         else:
             # push each node's current comp to its neighbors, take min
@@ -152,69 +136,59 @@ def connected_components(
                 F.min("comp").alias("comp"), F.min("_old").alias("_old")
             )
             new_comp = agg.select(
-                "node", "comp",
-                *([(F.col("comp") < F.col("_old")).alias("_chg")]
-                  if general else []),
+                "node", "comp", (F.col("comp") < F.col("_old")).alias("_chg"),
             )
         # pointer jumping (path compression): comp(v) ← comp(comp(v)).
         # Neighbor-min alone moves the min one hop per round (O(diameter));
         # with jumping each round roughly halves pointer depth → O(log n)
-        # rounds even on path graphs. In fixed-rounds mode the jump only
-        # helps BETWEEN rounds (after the last min round it is the
-        # identity for any graph whose declared round budget converged —
-        # the star-forest case), and the self-join would double-compute
-        # the un-checkpointed round, so it is skipped on the final round.
-        if general or r < n_rounds - 1:
-            # both self-join sides share the round aggregation's shuffle
-            # via ReuseExchange (same subtree, same partitioning), so the
-            # min step is computed once per round without an explicit
-            # persist — measured: a persist here SERIALIZES the two join
-            # branches on cache materialization locks (7.5-15 s vs 4-5 s
-            # per CC call at bench scale).
-            x, y = new_comp.alias("x"), new_comp.alias("y")
-            jumped = (
-                x.join(y, F.col("x.comp") == F.col("y.node"), "left")
-                .select(
-                    F.col("x.node").alias("node"),
-                    F.coalesce(F.col("y.comp"), F.col("x.comp")).alias("comp"),
-                    *([F.col("x._chg").alias("_chg")] if general else []),
-                )
+        # rounds even on path graphs. Both self-join sides share the
+        # round aggregation's shuffle via ReuseExchange (same subtree,
+        # same partitioning), so the min step is computed once per round
+        # without an explicit persist — measured: a persist here
+        # SERIALIZES the two join branches on cache materialization locks
+        # (7.5-15 s vs 4-5 s per CC call at bench scale).
+        x, y = new_comp.alias("x"), new_comp.alias("y")
+        jumped = (
+            x.join(y, F.col("x.comp") == F.col("y.node"), "left")
+            .select(
+                F.col("x.node").alias("node"),
+                F.coalesce(F.col("y.comp"), F.col("x.comp")).alias("comp"),
+                F.col("x._chg").alias("_chg"),
             )
-        else:
-            jumped = new_comp
-        if general:
-            jumped = jumped.localCheckpoint(eager=True)
-            # fixpoint probe, FUSED into the round aggregation (r6):
-            # labels are monotone non-increasing under both the push-min
-            # and the jump, so "some label strictly decreased in the min
-            # step" (_chg) is equivalent to the old post-jump frame
-            # comparison — min-step identity implies every label already
-            # equals its component minimum (a stable assignment is
-            # constant per component and bounded by the min node's own
-            # monotone label), hence the jump is the identity too. The
-            # probe is a short-circuit scan of the checkpointed frame
-            # instead of a join job per round.
-            changed = jumped.where(F.col("_chg")).limit(1).count()
-            comp = jumped.select("node", "comp")
-            if changed == 0:
-                break
-        else:
-            comp = jumped
+            .localCheckpoint(eager=True)
+        )
+        # fixpoint probe, FUSED into the round aggregation (r6): labels
+        # are monotone non-increasing under both the push-min and the
+        # jump, so "some label strictly decreased in the min step" (_chg)
+        # is equivalent to the old post-jump frame comparison — min-step
+        # identity implies every label already equals its component
+        # minimum (a stable assignment is constant per component and
+        # bounded by the min node's own monotone label), hence the jump
+        # is the identity too. The probe is a short-circuit scan of the
+        # checkpointed frame instead of a join job per round.
+        changed = jumped.where(F.col("_chg")).limit(1).count()
+        comp = jumped.select("node", "comp")
+        if changed == 0:
+            break
     return comp
 
 
 def canonicalize(
-    linked_mentions: DataFrame, n_salt: int = 8, fixed_rounds: int | None = None
+    linked_mentions: DataFrame, fixed_rounds: int | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """linked term mentions → (nodes, edges) graph tables.
 
     nodes(node_id, node_kind, canonical_label, aliases, n_mentions)
     edges(src, dst, rel, weight)
 
-    fixed_rounds: forwarded to connected_components — pass 1 for a
-    functional dictionary (star-forest graph, provably converged after one
-    round; see plans/pipeline.annotate), None for the general fixpoint loop.
+    fixed_rounds=1 declares the linking graph a star forest (a functional
+    dictionary, see plans/pipeline.annotate) and builds the nodes with two
+    lazy aggregations instead of a CC job: the component of a surface is
+    its min term id, exactly what one hash-min round assigns.
+    fixed_rounds=None runs the general connected_components loop.
     """
+    if fixed_rounds not in (None, 1):
+        raise ValueError(f"fixed_rounds must be None or 1, got {fixed_rounds}")
     pairs = linked_mentions.select(
         F.concat(F.lit("1:"), "match_norm").alias("src"),
         F.concat(F.lit("0:"), "term_id").alias("dst"),
@@ -226,9 +200,9 @@ def canonicalize(
         .withColumn("rel", F.lit("linksTo"))
         .select("src", "dst", "rel", "weight")
     )
-    comp = connected_components(
-        edges.select("src", "dst"), n_salt=n_salt, fixed_rounds=fixed_rounds
-    )
+    if fixed_rounds == 1:
+        return _star_nodes(linked_mentions), edges
+    comp = connected_components(edges.select("src", "dst"))
 
     # per-component rollup: canonical id = the (term-first) min node id
     members = comp.withColumn(
@@ -265,6 +239,44 @@ def canonicalize(
         )
     )
     return nodes, edges
+
+
+def _star_nodes(linked_mentions: DataFrame) -> DataFrame:
+    """Nodes of a star-forest linking graph without a CC job: per surface
+    its min term id and mention count (the one-round hash-min
+    component), then per term its sorted surfaces and summed counts. Every
+    linked term is a member of its own component too — the label branch of
+    the union — so a term that no surface elects still gets a node, with
+    no aliases and n_mentions = 0. Both steps are map-side combinable
+    aggregations of one lazy plan: no checkpoint, no eager action."""
+    surfaces = linked_mentions.groupBy(F.col("match_norm").alias("surface")).agg(
+        F.min("term_id").alias("term_id"), F.count("*").alias("n")
+    )
+    members = surfaces.select(
+        "term_id", "surface", "n", F.lit(None).cast("string").alias("label")
+    ).unionByName(
+        linked_mentions.select(
+            "term_id",
+            F.lit(None).cast("string").alias("surface"),
+            F.lit(0).cast("long").alias("n"),
+            F.col("term_label").alias("label"),
+        )
+    )
+    return (
+        members.groupBy("term_id")
+        .agg(
+            F.sort_array(F.collect_set("surface")).alias("aliases"),
+            F.sum("n").alias("n_mentions"),
+            F.min("label").alias("label"),
+        )
+        .select(
+            F.col("term_id").alias("node_id"),
+            F.lit("entity").alias("node_kind"),
+            F.coalesce("label", "term_id").alias("canonical_label"),
+            "aliases",
+            "n_mentions",
+        )
+    )
 
 
 def fuzzy_pairs(

@@ -14,7 +14,7 @@ unit was the transaction. The engine's unit is the *partition*:
   (bit_xor of row hashes), wall time. This is the parquet-backend stand-in
   for an Iceberg snapshot (SURVEY.md §7.3(1)); on a cluster the same code
   targets `df.writeTo(table).overwritePartitions()`.
-- resume: parts present in the manifest with status=done are anti-joined
+- resume: parts present in the manifest with status=done are filtered
   out of the input (J4) — a crashed run re-processes only missing parts,
   and re-writing a part is idempotent.
 - purge (S7): drop one run's partition directories (Iceberg:
@@ -73,6 +73,10 @@ def read_manifests(spark: SparkSession, out_dir: str) -> DataFrame | None:
     return spark.read.parquet(p)
 
 
+def _run_manifest(spark: SparkSession, out_dir: str, run_id: str) -> DataFrame:
+    return spark.read.parquet(manifest_path(out_dir)).where(F.col("run_id") == run_id)
+
+
 def materialize_graph(
     tables: dict[str, DataFrame], out_dir: str, run_id: str
 ) -> None:
@@ -96,24 +100,29 @@ def run_annotate(
     resume: bool = False,
     build_graph: bool = True,
 ) -> DataFrame:
-    """Annotate → partitioned triple sink + manifests. Returns the manifest
-    rows written by THIS invocation.
+    """Annotate → partitioned triple sink + manifests. Returns the run's
+    manifest rows.
 
     only_parts simulates a partial/crashed run in tests; resume=True skips
-    parts already marked done in the manifest (anti-join J4).
+    parts already marked done in the manifest (J4). A resume with nothing
+    left to process writes nothing, so the run's graph survives it.
     """
     t0 = time.time()
     src = with_part_id(transcripts, n_parts)
-
+    if only_parts is not None:
+        src = src.where(F.col("part_id").isin(only_parts))
     if resume:
         done = read_manifests(spark, out_dir)
         if done is not None:
-            done_parts = done.where(
-                (F.col("run_id") == run_id) & (F.col("status") == "done")
-            ).select("part_id").dropDuplicates()
-            src = src.join(done_parts, "part_id", "left_anti")
-    if only_parts is not None:
-        src = src.where(F.col("part_id").isin(only_parts))
+            # at most n_parts ids: filter with a literal set, no join
+            done_ids = sorted({
+                r.part_id for r in done.where(
+                    (F.col("run_id") == run_id) & (F.col("status") == "done")
+                ).select("part_id").distinct().collect()
+            })
+            src = src.where(~F.col("part_id").isin(done_ids))
+            if len(done_ids) == n_parts or src.isEmpty():
+                return _run_manifest(spark, out_dir, run_id)
 
     plan = annotate(spark, src, lex, build_graph=build_graph)
     # part_id is a pure function of conv_id — recompute on the output
@@ -160,7 +169,7 @@ def run_annotate(
 
     if build_graph:
         materialize_graph(plan, out_dir, run_id)
-    return spark.read.parquet(manifest_path(out_dir)).where(F.col("run_id") == run_id)
+    return _run_manifest(spark, out_dir, run_id)
 
 
 def read_triples(spark: SparkSession, out_dir: str, run_id: str | None = None) -> DataFrame:

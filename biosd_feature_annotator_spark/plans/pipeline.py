@@ -111,11 +111,10 @@ def annotate(
     out: dict[str, DataFrame] = {"mentions": mentions, "triples": triples}
     if build_graph:
         # functional dictionary → the linking graph is a star forest
-        # (every surface has exactly one term edge and term ids sort below
-        # surface ids), so CC is provably converged after ONE round: run
-        # it probe-free as a single lazy plan instead of the checkpointed
-        # fixpoint loop (several fixed-cost jobs saved per run). The
-        # ranked/multi-candidate path keeps the general loop.
+        # (every surface has exactly one term edge), so each component is
+        # one term plus its surfaces: the nodes are two lazy aggregations
+        # over `linked` and building this plan launches no Spark job. The
+        # ranked/multi-candidate path keeps the checkpointed CC loop.
         nodes, edges = canonicalize(
             linked, fixed_rounds=1 if not ranked_linking else None
         )

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from biosd_feature_annotator_spark.operators.canonicalize import (
+    canonicalize,
     connected_components,
     salted_min,
 )
@@ -49,41 +50,92 @@ def test_salted_min_equals_plain_min(spark):
     assert plain == salted
 
 
-def test_cc_fixed_rounds_matches_loop_on_star_forest(spark):
-    """The probe-free fixed_rounds=1 fast path (functional-dictionary star
-    forest: term ids '0:*' sort below surface ids '1:*') must produce the
-    identical component assignment as the general fixpoint loop."""
-    edges = [
-        ("1:human", "0:T9606"), ("1:homo sapiens", "0:T9606"),
-        ("1:h. sapiens", "0:T9606"), ("1:mouse", "0:T10090"),
-        ("1:mus musculus", "0:T10090"), ("1:rat", "0:T10116"),
+def _graph_rows(nodes, edges):
+    node_key = lambda r: (r.node_id, r.node_kind, r.canonical_label,  # noqa: E731
+                          tuple(r.aliases), r.n_mentions)
+    return (sorted(map(node_key, nodes.collect())),
+            sorted(map(tuple, edges.collect())))
+
+
+def _assert_star_matches_loop(linked):
+    """canonicalize's star-forest aggregation (fixed_rounds=1) must equal
+    the general CC loop on the same linked mentions: rows and schema of
+    both nodes and edges."""
+    star = canonicalize(linked, fixed_rounds=1)
+    loop = canonicalize(linked, fixed_rounds=None)
+    assert [df.schema for df in star] == [df.schema for df in loop]
+    assert _graph_rows(*star) == _graph_rows(*loop)
+    return star
+
+
+def test_canonicalize_star_matches_loop_hand_built(spark):
+    """Hand-built linked mentions: one term reached through its label, a
+    synonym and a token-set surface; one hot term with 50 surfaces; one
+    term with a NULL label (its canonical label falls back to the id)."""
+    rows = [
+        ("homo sapiens", "label", "T9606", "Homo sapiens"),
+        ("homo sapiens", "label", "T9606", "Homo sapiens"),
+        ("human", "synonym", "T9606", "Homo sapiens"),
+        ("homo sapiens strain", "tokens", "T9606", "Homo sapiens"),
+        ("mystery", "label", "TNULL", None),
+        ("mystery", "label", "TNULL", None),
     ]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    loop = {(r.node, r.comp) for r in connected_components(df, max_iter=10).collect()}
-    fast = {(r.node, r.comp) for r in connected_components(df, fixed_rounds=1).collect()}
-    assert fast == loop
-    # and every component head is the term node
-    assert all(c.startswith("0:") for _, c in fast)
+    rows += [(f"hot{i:02d}", "synonym", "HOT", "Hot term")
+             for i in range(50) for _ in range(1 + i % 3)]
+    linked = spark.createDataFrame(
+        rows, "match_norm string, match_kind string, term_id string, "
+              "term_label string")
+    nodes, _ = _assert_star_matches_loop(linked)
+    by_id = {r.node_id: r for r in nodes.collect()}
+    assert set(by_id) == {"T9606", "TNULL", "HOT"}
+    assert by_id["T9606"].aliases == ["homo sapiens", "homo sapiens strain", "human"]
+    assert by_id["T9606"].n_mentions == 4
+    assert by_id["TNULL"].canonical_label == "TNULL"
+    assert len(by_id["HOT"].aliases) == 50
+    assert by_id["HOT"].n_mentions == sum(1 + i % 3 for i in range(50))
 
 
 def test_pipeline_graph_fast_path_matches_general(spark, lexicon):
-    """annotate(build_graph=True) nodes via fixed_rounds=1 == the general
-    CC loop on the same linked mentions (golden corpus)."""
-    from biosd_feature_annotator_spark.operators.canonicalize import canonicalize
+    """annotate(build_graph=True) nodes and edges via fixed_rounds=1 ==
+    the general CC loop on the same linked mentions (golden corpus and a
+    3,000-turn synthetic corpus)."""
     from biosd_feature_annotator_spark.operators.extract import extract_mentions
     from biosd_feature_annotator_spark.operators.link import link_entities
     from biosd_feature_annotator_spark.sources.lexicon import lexicon_df
+    from biosd_feature_annotator_spark.synth import (
+        golden_transcripts,
+        synth_transcripts,
+    )
+
+    for tr in (golden_transcripts(spark), synth_transcripts(spark, 3000)):
+        linked = link_entities(extract_mentions(tr, lexicon),
+                               lexicon_df(spark, lexicon)).persist()
+        nodes, edges = _assert_star_matches_loop(linked)
+        assert nodes.count() > 0 and edges.count() > 0
+        linked.unpersist()
+
+
+def test_annotate_build_graph_launches_no_job(spark, lexicon):
+    """Building the annotate plan — graph included — is lazy: no Spark job
+    runs until a caller forces one of its frames."""
+    from biosd_feature_annotator_spark.plans.pipeline import annotate
     from biosd_feature_annotator_spark.synth import golden_transcripts
 
+    sc = spark.sparkContext
+    group = "annotate-plan-build"
     tr = golden_transcripts(spark)
-    linked = link_entities(extract_mentions(tr, lexicon), lexicon_df(spark, lexicon))
-    linked = linked.persist()
-    fast_nodes, _ = canonicalize(linked, fixed_rounds=1)
-    loop_nodes, _ = canonicalize(linked, fixed_rounds=None)
-    key = lambda r: (r.node_id, r.node_kind, r.canonical_label,
-                     tuple(r.aliases), r.n_mentions)  # noqa: E731
-    assert sorted(map(key, fast_nodes.collect())) == sorted(map(key, loop_nodes.collect()))
-    linked.unpersist()
+    sc.setJobGroup(group, "annotate plan build")
+    try:
+        plan = annotate(spark, tr, lexicon, build_graph=True)
+        assert {"nodes", "edges"} <= set(plan)
+        launched = list(sc.statusTracker().getJobIdsForGroup(group))
+        spark.range(1).collect()  # control: the group does see jobs
+        control = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert launched == []
+    assert control
 
 
 def test_fs_weights_learn_field_reliability_and_separate(spark):

@@ -76,6 +76,32 @@ def test_resume_is_idempotent_noop(spark, lexicon, transcripts, tmp_path):
     assert table_fp(read_triples(spark, out, "r")) == fp1
 
 
+@pytest.mark.parametrize("only_parts", [None, [0, 1, 2, 3]])
+def test_resume_noop_keeps_graph(spark, lexicon, transcripts, tmp_path, only_parts):
+    """A resume of a finished run has no part left to process: it must
+    write nothing, so the run's nodes and edges survive it unchanged —
+    whether every part is done or only the parts the run was scoped to."""
+    out = str(tmp_path / "noop_graph")
+    n_done = N_PARTS if only_parts is None else len(only_parts)
+
+    def graph():
+        return {
+            t: sorted(map(repr, spark.read.parquet(
+                os.path.join(out, t, "run_id=r")).collect()))
+            for t in ("nodes", "edges")
+        }
+
+    run_annotate(spark, transcripts, lexicon, out, "r", N_PARTS, only_parts=only_parts)
+    fp1, g1 = table_fp(read_triples(spark, out, "r")), graph()
+    assert g1["nodes"] and g1["edges"]
+    got = run_annotate(spark, transcripts, lexicon, out, "r", N_PARTS,
+                       only_parts=only_parts, resume=True)
+    assert got.count() == n_done
+    assert read_manifests(spark, out).count() == n_done
+    assert table_fp(read_triples(spark, out, "r")) == fp1
+    assert graph() == g1
+
+
 def test_purge(spark, lexicon, transcripts, tmp_path):
     out = str(tmp_path / "purge")
     run_annotate(spark, transcripts, lexicon, out, "a", 4, build_graph=False)

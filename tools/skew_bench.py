@@ -2,15 +2,14 @@
 timed salted vs unsalted at bench scale, min-of-2 — the measurement the
 r4 VERDICT asked for (ask #5).
 
-Three arms, all on the same synthetic star corpus (N edges, ONE term
+Two arms, both on the same synthetic star corpus (N edges, ONE term
 holding 30% of all surface links — the hot-entity shape BASELINE.json
 calls out):
 
-1. cc_salted vs cc_unsalted — connected_components with n_salt=8 vs
-   n_salt=1 (the two-phase min collapses to a plain per-key min).
-2. stats_salted vs stats_unsalted — the entity-stats count aggregate as
-   a two-phase (obj, salt) partial → final vs a direct groupBy(obj).
-3. join_aqe_on vs join_aqe_off — the CC push join (edges ⋈ comp on the
+1. stats_salted vs stats_unsalted — a min aggregate per entity as a
+   two-phase (key, salt) partial → final (`salted_min`) vs a direct
+   groupBy(dst).
+2. join_aqe_on vs join_aqe_off — the CC push join (edges ⋈ comp on the
    hot node) as a forced sort-merge join with AQE skew-join splitting
    enabled vs disabled; broadcast thresholds zeroed so the skewed
    exchange actually happens.
@@ -18,12 +17,12 @@ calls out):
 HONESTY NOTE, recorded with the numbers: for ALGEBRAIC aggregates
 (min/count) Spark always runs a map-side partial aggregation, which
 already reduces a 30%-hot key to one row per input partition before the
-shuffle — so arms 1-2 are expected to show EQUIVALENCE, not a salted
-win; the salt exists to bound the reducer when the aggregation state is
-NOT map-side combinable (collect_set-like states) and to keep the
-guarantee independent of partial-agg fallback behavior. The genuinely
-skew-prone physical op is the shuffle JOIN on the hot key — arm 3 — where
-AQE's skew-join splitting is the production mitigation.
+shuffle — so arm 1 is expected to show EQUIVALENCE, not a salted win;
+the salt exists to bound the reducer when the aggregation state is NOT
+map-side combinable (collect_set-like states) and to keep the guarantee
+independent of partial-agg fallback behavior. The genuinely skew-prone
+physical op is the shuffle JOIN on the hot key — arm 2 — where AQE's
+skew-join splitting is the production mitigation.
 
 Usage: python tools/skew_bench.py [n_edges]    (default 2_000_000)
 Prints one JSON line; paste the table into BENCH/BASELINE.md.
@@ -40,10 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from biosd_feature_annotator_spark.operators.canonicalize import (  # noqa: E402
-    connected_components,
-    salted_min,
-)
+from biosd_feature_annotator_spark.operators.canonicalize import salted_min  # noqa: E402
 from biosd_feature_annotator_spark.session import get_spark  # noqa: E402
 
 HOT_FRAC = 0.30
@@ -66,12 +62,9 @@ def synth_star_edges(spark, n: int):
 
 
 def _timed(fn) -> float:
-    """One timed run; gc.collect() afterwards releases the
-    localCheckpoint RDD blocks a CC invocation leaves behind (they free
-    via Py4J finalizers on Python GC) — without it, later arms run under
-    accumulated block-manager memory pressure and the comparison
-    measures GC, not the operator (observed: an 86 s first rep vs 14 s
-    steady-state on the same arm)."""
+    """One timed run; gc.collect() afterwards lets Py4J finalizers free
+    the JVM objects the run left behind, so the next arm does not start
+    under their memory pressure."""
     import gc
 
     t0 = time.monotonic()
@@ -86,9 +79,7 @@ def paired_min(fn_a, fn_b, reps: int = 2, warmup: int = 1) -> tuple[float, float
     after `warmup` untimed runs of each. Interleaving is load-bearing:
     sequential arms absorb slow box-noise drift into whichever runs
     first (measured 23 s vs 17 s sequentially for two arms that
-    interleave to 9.3-10.2 s vs 9.0-10.8 s), and the heavy CC plan needs
-    two warm-ups before JIT tiering stabilizes (25 s → 10 s → steady) —
-    so CC passes warmup=2."""
+    interleave to 9.3-10.2 s vs 9.0-10.8 s)."""
     for _ in range(warmup):
         _timed(fn_a)
         _timed(fn_b)
@@ -109,14 +100,7 @@ def main() -> None:
 
     out: dict[str, float] = {}
 
-    # --- arm 1: CC salted vs unsalted (fixed_rounds=1: star forest) ----
-    out["cc_salted_sec"], out["cc_unsalted_sec"] = paired_min(
-        lambda: connected_components(edges, n_salt=8, fixed_rounds=1).count(),
-        lambda: connected_components(edges, n_salt=1, fixed_rounds=1).count(),
-        warmup=2,
-    )
-
-    # --- arm 2: entity-stats count, two-phase salted vs direct ---------
+    # --- arm 1: entity-stats min, two-phase salted vs direct -----------
     out["stats_salted_sec"], out["stats_unsalted_sec"] = paired_min(
         lambda: salted_min(
             edges.withColumn("v", F.col("src")), "dst", "v", n_salt=8
@@ -124,7 +108,7 @@ def main() -> None:
         lambda: edges.groupBy("dst").agg(F.min("src").alias("v")).count(),
     )
 
-    # --- arm 3: hot-key shuffle join, AQE skew split on vs off ---------
+    # --- arm 2: hot-key shuffle join, AQE skew split on vs off ---------
     comp = edges.select(F.col("dst").alias("node")).distinct() \
         .withColumn("comp", F.col("node")).persist()
     comp.count()
